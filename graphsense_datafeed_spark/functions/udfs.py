@@ -138,26 +138,26 @@ def udtf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(groups)."""
 
     def running_purchases(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_uid = None
-        carry_cum = 0
+        # (last row's raw user_id, its running count); the key may be
+        # null, which is one group like DuckDB's PARTITION BY user_id
+        carry = None
         for pdf in batches:
             if not len(pdf):
                 continue
+            uid = pdf["user_id"]
             cum = (
                 (pdf["event_type"] == "purchase")
                 .astype("int64")
-                .groupby(pdf["user_id"].to_numpy())
+                .groupby(uid.to_numpy(), dropna=False)
                 .cumsum()
             )
-            if carry_uid is not None:
-                mask = pdf["user_id"].to_numpy() == carry_uid
-                if mask.any():
-                    cum[mask] += carry_cum
-            carry_uid = int(pdf["user_id"].iloc[-1])
-            carry_cum = int(cum.iloc[-1])
+            if carry is not None:
+                key, n = carry
+                cum[uid.isna() if pd.isna(key) else uid == key] += n
+            carry = (uid.iloc[-1], int(cum.iloc[-1]))
             yield pd.DataFrame(
                 {
-                    "user_id": pdf["user_id"],
+                    "user_id": uid,
                     "event_id": pdf["event_id"],
                     "purchases_so_far": cum,
                 }

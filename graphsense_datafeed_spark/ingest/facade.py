@@ -195,7 +195,6 @@ def stream_ingest_blocks(
     Scale: block headers are tiny next to tx payloads; the per-batch
     shuffle is keyed on height within affected buckets only, and the
     bucket count bounds file-listing pressure on the target."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.withColumn(
@@ -222,7 +221,12 @@ def stream_ingest_blocks(
             .filter(F.col("rnk") == 1)
             .drop("rnk")
         )
-        winners.write.mode("overwrite").partitionBy("hbucket").parquet(target_dir)
+        (
+            winners.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("hbucket")
+            .parquet(target_dir)
+        )
 
     q = (
         spark.readStream.schema(BLOCK_FEED_SCHEMA)
@@ -684,10 +688,11 @@ def label_propagate(sym, labels, max_iter: int = 20, require_converged: bool = F
     Returns ``(labels, rounds_run)`` so callers/tests can observe that
     convergence beat the bound.
     """
-    assert max_iter % 2 == 0, (
-        "label_propagate runs rounds in pairs; pass an even max_iter "
-        f"(got {max_iter})"
-    )
+    if max_iter % 2 != 0:
+        raise ValueError(
+            "label_propagate runs rounds in pairs; pass an even max_iter "
+            f"(got {max_iter})"
+        )
     adj_raw = (
         sym.select("src", "dst")
         .unionAll(

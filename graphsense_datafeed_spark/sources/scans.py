@@ -451,18 +451,12 @@ def sink_partitioned_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     target_day = ev.agg(F.min("event_date")).collect()[0][0]
     day = ev.filter(F.col("event_date") == F.lit(target_day))
-    # torn ingest: half the day's rows lost
-    with_conf = spark.conf
-    prev = with_conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    with_conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        day.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").partitionBy(
-            "event_date"
-        ).parquet(out)
-        # repair: re-ingest the full day; dynamic mode rewrites only it
-        day.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    finally:
-        with_conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # torn ingest (half the day's rows lost), then the repair that
+    # re-ingests the full day; dynamic mode rewrites only that day
+    for part in (day.filter(F.col("event_id") % 2 == 0), day):
+        part.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("event_date").parquet(out)
 
     back = spark.read.parquet(out)
     return back.groupBy(F.col("event_date").cast("date").alias("event_date")).agg(

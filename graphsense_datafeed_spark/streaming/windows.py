@@ -80,6 +80,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _STREAM_STATE_PARTITIONS = 8  # local floor (r15 measured optimum at fixture SFs)
+_STATE_BYTES_PER_PARTITION = 64 * 1024 * 1024
 
 
 def stream_state_partitions(spark: SparkSession, src_path: str) -> int:
@@ -94,16 +95,24 @@ def stream_state_partitions(spark: SparkSession, src_path: str) -> int:
     parallelism knob (at deployment scale that conf is sized to the
     cluster, so a 100 TB feed lands on cluster parallelism while every
     fixture SF keeps the measured local count — the label_propagate
-    scale-adaptive precedent)."""
+    scale-adaptive precedent).  A directory source is sized as the sum
+    of its member files (the ``source_fingerprint`` traversal)."""
     try:
-        size = os.path.getsize(src_path)
+        if os.path.isdir(src_path):
+            size = sum(
+                os.path.getsize(os.path.join(root, name))
+                for root, _dirs, files in os.walk(src_path)
+                for name in files
+            )
+        else:
+            size = os.path.getsize(src_path)
     except OSError:
         size = 0
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001 — conf unreadable on exotic builds
         cap = 200
-    derived = -(-size // (64 * 1024 * 1024))  # ceil(bytes / 64 MB)
+    derived = -(-size // _STATE_BYTES_PER_PARTITION)  # ceil(bytes / 64 MB)
     return max(_STREAM_STATE_PARTITIONS, min(cap, derived))
 
 

@@ -1,12 +1,11 @@
 """Full-registry per-query timing ledger (VERDICT r13 item 3).
 
-bench.py times the 24 headline queries; the other ~800 registry rows
-were timed only implicitly (correctness sweeps measure hash-match, not
-per-query wall), so a perf regression in a non-headline family was
+The old headline benchmark timed 24 queries; the other ~800 registry
+rows were timed only implicitly (correctness sweeps measure hash-match,
+not per-query wall), so a perf regression in a non-headline family was
 invisible until an sf10 census run noticed it. This script times EVERY
-registered query at sf0.1 (one shared session, bench.py's count()
-materialization and warm-up conventions) and writes one diffable JSON
-ledger per round:
+registered query at sf0.1 (one shared session, count() materialization
+after a warm-up) and writes one diffable JSON ledger per round:
 
     python scripts/bench_full.py --round 14
     -> /root/repo/BENCH_full_sf01_r14.json
@@ -15,9 +14,9 @@ The ledger records per-query seconds + row counts, and — when an
 earlier BENCH_full_sf01_r{M}.json exists — the list of queries whose
 wall more than DOUBLED since the most recent prior ledger (the
 round-over-round rot alarm BASELINE.md's protocol asks for). Readings
-are suite-position-contaminated exactly like bench.py's in-suite
-numbers; treat the 2x alarm as "re-measure isolated on a calm box",
-not as a verdict by itself.
+are suite-position-contaminated like any in-suite numbers; treat the
+2x alarm as "re-measure isolated on a calm box", not as a verdict by
+itself.
 """
 
 from __future__ import annotations
@@ -78,7 +77,7 @@ def main() -> int:
 
     registry.load_all_operators()
     spark = build_session("gds-bench-full")
-    # bench.py's warm-up: JVM/codegen + page cache + Arrow worker pool,
+    # warm-up: JVM/codegen + page cache + Arrow worker pool,
     # so per-query numbers measure the plan, not first-touch costs.
     load(spark, args.sf_dir, "lineitem").count()
     load(spark, args.sf_dir, "events").count()
@@ -93,7 +92,7 @@ def main() -> int:
     # the mapInArrow eval type spawns its own Python worker pool
     # (separate from the pandas_udf pool; ~2.5-4 s first use) — warm it
     # too so suite position doesn't decide which query pays the spawn
-    # (same methodology note as bench.py, OPTIMIZATION_r15.md).
+    # (methodology note in OPTIMIZATION_r15.md).
     spark.range(64).repartition(32).mapInArrow(_warm_arrow, "id long").count()
 
     # Pre-stage fixture derivatives OUTSIDE the timed window (VERDICT

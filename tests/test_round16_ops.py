@@ -120,7 +120,7 @@ class TestLabelPropagateHubSalting:
             .select("addr", F.xxhash64("addr").alias("label"))
             .localCheckpoint()
         )
-        with pytest.raises(AssertionError, match="even max_iter"):
+        with pytest.raises(ValueError, match="even max_iter"):
             facade.label_propagate(sym, labels, max_iter=7)
 
 
@@ -154,6 +154,34 @@ class TestStreamStatePartitions:
 
         monkeypatch.setattr(w.os.path, "getsize", boom)
         assert w.stream_state_partitions(spark, "gone") == 8
+
+    def test_directory_source_sums_member_files(self, spark, tmp_path, monkeypatch):
+        import os
+
+        import graphsense_datafeed_spark.streaming.windows as w
+
+        src = str(tmp_path / "multi.parquet")
+        (
+            spark.range(40_000)
+            .selectExpr("id", "id * 7 AS v")
+            .repartition(4)
+            .write.parquet(src)
+        )
+        parts = [n for n in os.listdir(src) if n.endswith(".parquet")]
+        assert len(parts) == 4
+        total = sum(
+            os.path.getsize(os.path.join(root, n))
+            for root, _dirs, files in os.walk(src)
+            for n in files
+        )
+        # 8 KB per partition, floor 1: the directory entry alone (at
+        # most 4 KB) would size to a single partition
+        monkeypatch.setattr(w, "_STATE_BYTES_PER_PARTITION", 8192)
+        monkeypatch.setattr(w, "_STREAM_STATE_PARTITIONS", 1)
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        got = w.stream_state_partitions(spark, src)
+        assert got == min(cap, -(-total // 8192))
+        assert got > 1
 
     def test_events_stream_stashes_count(self, spark, sf_dir):
         import graphsense_datafeed_spark.streaming.windows as w
@@ -198,4 +226,38 @@ class TestUdtfGroupedMapCarry:
                 .alias("purchases_so_far"),
             )
         )
+        assert got == want
+
+    def test_null_user_id_matches_duckdb(self, spark, sf_dir, tmp_path):
+        # a quarter of the events lose their user_id: the null key is
+        # one group, straddling many tiny Arrow batches
+        import duckdb
+
+        from graphsense_datafeed_spark.functions.udfs import udtf_grouped_map
+
+        con = duckdb.connect()
+        con.sql(
+            f"COPY (SELECT * REPLACE (CASE WHEN event_id % 4 = 0 THEN NULL "
+            f"ELSE user_id END AS user_id) "
+            f"FROM read_parquet('{sf_dir}/events.parquet')) "
+            f"TO '{tmp_path}/events.parquet' (FORMAT parquet)"
+        )
+        con.sql(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet')"
+        )
+
+        def key(r):
+            return (r[0] is not None, r[0] or 0, r[1], r[2])
+
+        prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        try:
+            got = sorted(
+                map(tuple, udtf_grouped_map(spark, str(tmp_path)).collect()), key=key
+            )
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+        want = sorted(con.sql(registry.ORACLES["udtf_grouped_map"]).fetchall(), key=key)
+        assert sum(r[0] is None for r in want) > 7
         assert got == want

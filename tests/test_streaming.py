@@ -1008,3 +1008,29 @@ def test_stream_reorg_daemon_restart_resumes_exactly_once(spark, tmp_path):
 
     stream_ingest_blocks(spark, feed, target, ckpt)  # no new files
     assert _block_table_rows(spark, target) == got
+
+
+def test_stream_reorg_daemon_keeps_session_overwrite_mode(spark, tmp_path):
+    """The daemon's dynamic partition overwrite is a per-write option,
+    not a session setting: after it runs, the session conf is unchanged
+    and a later partitioned ParquetSink overwrite replaces the whole
+    table instead of keeping partitions absent from the new rows."""
+    from graphsense_datafeed_spark.ingest.facade import stream_ingest_blocks
+    from graphsense_datafeed_spark.sources.sinks import ParquetSink
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    feed = str(tmp_path / "feed")
+    _stage_reorg_feed(feed, upto_file=1)
+    stream_ingest_blocks(
+        spark, feed, str(tmp_path / "block_table"), str(tmp_path / "ckpt")
+    )
+    assert spark.conf.get(key) == before
+
+    sink = ParquetSink(str(tmp_path / "sink"), partition_col="p")
+    schema = "p int, v int"
+    sink.write(spark.createDataFrame([(p, p) for p in range(4)], schema), "t", ["p"])
+    sink.write(spark.createDataFrame([(0, 10), (2, 12)], schema), "t", ["p"])
+    back = spark.read.parquet(str(tmp_path / "sink" / "t"))
+    got = sorted((r["p"], r["v"]) for r in back.collect())
+    assert got == [(0, 10), (2, 12)]
